@@ -26,12 +26,7 @@ from ..operators.upsert import ParquetUpsertSink, dedup_keep_latest
 # simplicity, manifest-based for concurrent writers + snapshot reads
 PricesSink = ParquetUpsertSink | ManifestParquetSink
 from ..sources.config import asset_universe_df
-from ..sources.rest import (
-    Fetcher,
-    fetch_market_charts,
-    fetch_markets,
-    normalize_chart_payloads,
-)
+from ..sources.rest import Fetcher, fetch_chart_prices, fetch_markets
 
 BACKFILL_MAX_DAYS = 90  # CoinGecko hourly cap (reference src/backfill.py:19,24)
 
@@ -66,15 +61,17 @@ def run_incremental(
     days: int = 1,
 ) -> dict[str, DataFrame]:
     """One incremental pass; returns the three upsert-ready frames and
-    merges prices into the sink (idempotent keyed MERGE)."""
+    merges prices into the sink (idempotent keyed MERGE).
+
+    The sink keeps the latest row per key over batch ∪ stored rows, so the
+    fetched batch goes in as is; the returned prices are deduped per key
+    (reference src/db.py:93-97 batch semantics). The returned frames are
+    lazy: consuming them fetches the charts (and markets) again."""
     universe = asset_universe_df(spark, assets)
     markets = fetch_markets(universe, fetcher)
-    charts = fetch_market_charts(universe, fetcher, days=days)
-    prices = normalize_chart_payloads(charts)
-    # batch-internal last-writer-wins before the merge (reference
-    # src/db.py:93-97 semantics)
-    prices = dedup_keep_latest(prices, ["asset_id", "ts"], ["inserted_at"])
-    prices_sink.upsert(prices)
+    fetched = fetch_chart_prices(universe, fetcher, days=days)
+    prices_sink.upsert(fetched)
+    prices = dedup_keep_latest(fetched, ["asset_id", "ts"], ["inserted_at"])
     return {
         "assets": build_assets(markets),
         "prices": prices,
@@ -91,14 +88,14 @@ def run_backfill(
     pacing_s: float = 0.0,
 ) -> DataFrame:
     """Bounded historical replay (reference src/backfill.py:20-34). Rows
-    flow partition→sink without driver accumulation."""
+    flow partition→sink without driver accumulation; the sink dedups the
+    batch itself. Returns the prices deduped per key, as a lazy frame:
+    consuming it fetches the charts again."""
     days = min(days, BACKFILL_MAX_DAYS)
     universe = asset_universe_df(spark, assets)
-    charts = fetch_market_charts(universe, fetcher, days=days, pacing_s=pacing_s)
-    prices = normalize_chart_payloads(charts)
-    prices = dedup_keep_latest(prices, ["asset_id", "ts"], ["inserted_at"])
-    prices_sink.upsert(prices)
-    return prices
+    fetched = fetch_chart_prices(universe, fetcher, days=days, pacing_s=pacing_s)
+    prices_sink.upsert(fetched)
+    return dedup_keep_latest(fetched, ["asset_id", "ts"], ["inserted_at"])
 
 
 def refresh_daily_metrics(

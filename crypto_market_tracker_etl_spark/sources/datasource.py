@@ -21,7 +21,6 @@ it generates the same hourly series shape the live API returns.
 
 from __future__ import annotations
 
-import json
 from collections.abc import Iterator, Sequence
 
 from pyspark.sql.datasource import (
@@ -50,6 +49,15 @@ def synthetic_chart(asset_id: str, days: int) -> dict:
     return {"prices": pts, "market_caps": mcs, "total_volumes": vols}
 
 
+def _price_rows(asset_id: str, points) -> Iterator[tuple]:
+    """``chart_points`` output → PRICES_DDL rows (ts at second precision)."""
+    import datetime as dt
+
+    for ms, price, mcap, vol in points:
+        ts = dt.datetime.fromtimestamp(ms // 1000, dt.timezone.utc).replace(tzinfo=None)
+        yield (asset_id, ts, price, mcap, vol, "coingecko")
+
+
 class ChunkPartition(InputPartition):
     def __init__(self, assets: Sequence[str]):
         self.assets = list(assets)
@@ -72,9 +80,7 @@ class CoinGeckoReader(DataSourceReader):
         ]
 
     def read(self, partition: ChunkPartition) -> Iterator[tuple]:
-        import datetime as dt
-
-        from .rest import API_BASE, fetch_with_retry, http_fetcher
+        from .rest import API_BASE, chart_points, fetch_with_retry, http_fetcher
 
         for asset_id in partition.assets:
             if self.transport == "synthetic":
@@ -84,13 +90,8 @@ class CoinGeckoReader(DataSourceReader):
                     f"{API_BASE}/coins/{asset_id}/market_chart"
                     f"?vs_currency={self.vs}&days={self.days}"
                 )
-                chart = json.loads(fetch_with_retry(http_fetcher, url))
-            mc = {int(ms): v for ms, v in chart.get("market_caps", [])}
-            vol = {int(ms): v for ms, v in chart.get("total_volumes", [])}
-            for ms, price in chart.get("prices", []):
-                ms = int(ms)
-                ts = dt.datetime.fromtimestamp(ms // 1000, dt.timezone.utc).replace(tzinfo=None)
-                yield (asset_id, ts, price, mc.get(ms), vol.get(ms), "coingecko")
+                chart = fetch_with_retry(http_fetcher, url)
+            yield from _price_rows(asset_id, chart_points(asset_id, chart))
 
 
 class CoinGeckoStreamReader(SimpleDataSourceStreamReader):
@@ -115,16 +116,11 @@ class CoinGeckoStreamReader(SimpleDataSourceStreamReader):
         return {"hour": 0}
 
     def _rows(self, start_h: int, end_h: int):
-        import datetime as dt
+        from .rest import chart_points
 
         for asset_id in self.assets:
-            chart = synthetic_chart(asset_id, self.days)
-            mc = {int(ms): v for ms, v in chart["market_caps"]}
-            vol = {int(ms): v for ms, v in chart["total_volumes"]}
-            for ms, price in chart["prices"][start_h:end_h]:
-                ms = int(ms)
-                ts = dt.datetime.fromtimestamp(ms // 1000, dt.timezone.utc).replace(tzinfo=None)
-                yield (asset_id, ts, price, mc.get(ms), vol.get(ms), "coingecko")
+            points = chart_points(asset_id, synthetic_chart(asset_id, self.days))
+            yield from _price_rows(asset_id, points[start_h:end_h])
 
     def read(self, start: dict):
         start_h = start["hour"]

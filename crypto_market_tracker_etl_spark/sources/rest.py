@@ -6,16 +6,18 @@ chunks (src/coingecko.py:42-62) and one market_chart call per asset
 (src/coingecko.py:36-41). Spark-first redesign:
 
 - the asset universe is a DataFrame partitioned into id-slices;
-- fetching happens INSIDE executor tasks via ``mapInPandas`` (Arrow-batched,
-  one HTTP session per partition, per-partition pacing — Spark task retries
-  are too coarse for rate limits, so the retry loop lives in the UDF);
+- fetching happens INSIDE executor tasks via ``mapInPandas`` /
+  ``mapInArrow`` (Arrow-batched, one HTTP session per partition,
+  per-partition pacing — Spark task retries are too coarse for rate
+  limits, so the retry loop lives in the UDF);
 - the transport is injectable (``fetcher``): tests and offline runs pass a
   fake; production passes ``http_fetcher`` (urllib, stdlib-only).
 
-Payload normalization is pure Spark: the market_chart response's three
-parallel ``[[epoch_ms, value], ...]`` arrays (reference src/etl.py:36-43)
-are exploded and joined on epoch ms — the relational form of the
-reference's ms-keyed dict probes.
+Each chart is fetched and normalized once, inside the fetch task:
+``chart_points`` turns the response's three parallel ``[[epoch_ms, value],
+...]`` arrays into price rows by probing ms-keyed market_cap / volume dicts
+(reference src/etl.py:36-43). It is the only place a chart body becomes
+rows; the ``coingecko`` data source (sources/datasource.py) calls it too.
 """
 
 from __future__ import annotations
@@ -25,6 +27,7 @@ import time
 from collections.abc import Callable, Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -82,22 +85,6 @@ MARKETS_SCHEMA = T.StructType(
     ]
 )
 
-CHART_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.StringType()),
-        T.StructField("payload", T.StringType()),  # raw JSON body
-    ]
-)
-
-# market_chart body: three parallel [[ms, value], ...] arrays
-CHART_JSON_SCHEMA = T.StructType(
-    [
-        T.StructField("prices", T.ArrayType(T.ArrayType(T.DoubleType()))),
-        T.StructField("market_caps", T.ArrayType(T.ArrayType(T.DoubleType()))),
-        T.StructField("total_volumes", T.ArrayType(T.ArrayType(T.DoubleType()))),
-    ]
-)
-
 
 def fetch_markets(universe: DataFrame, fetcher: Fetcher, vs: str = "usd") -> DataFrame:
     """Markets snapshot (reference src/coingecko.py:42-62): one request per
@@ -132,64 +119,99 @@ def fetch_markets(universe: DataFrame, fetcher: Fetcher, vs: str = "usd") -> Dat
     return universe.mapInPandas(run, MARKETS_SCHEMA)
 
 
-def fetch_market_charts(
+# one chart's price points before the Spark-side ts/source/inserted_at
+POINTS_SCHEMA = T.StructType(
+    [
+        T.StructField("asset_id", T.StringType()),
+        T.StructField("ms", T.LongType()),
+        T.StructField("price", T.DoubleType()),
+        T.StructField("market_cap", T.DoubleType()),
+        T.StructField("volume", T.DoubleType()),
+    ]
+)
+
+
+def _num(v) -> float | None:
+    return None if v is None else float(v)
+
+
+def chart_points(
+    asset_id: str, body: str | dict, cutoff_ms: int | None = None
+) -> list[tuple[int, float | None, float | None, float | None]]:
+    """One market_chart body → ``(ms, price, market_cap, volume)`` per price
+    point (reference src/etl.py:36-43).
+
+    ``body`` is the raw JSON text or the already-decoded dict. market_caps
+    and total_volumes become ms-keyed dicts probed once per price point: a
+    repeated ms keeps its last value, a missing point gives None. Points
+    before ``cutoff_ms`` are dropped (the hourly-emulation trim, reference
+    src/coingecko.py:79-84). A body that is not JSON, lacks a ``prices``
+    array, or holds a malformed point raises ValueError naming the asset,
+    so a rate-limit page never passes as an asset with no data.
+    """
+    try:
+        chart = json.loads(body) if isinstance(body, str) else body
+        prices = chart.get("prices") if isinstance(chart, dict) else None
+        if not isinstance(prices, list):
+            raise ValueError("no 'prices' array")
+        mc = {int(ms): v for ms, v in chart.get("market_caps") or ()}
+        vol = {int(ms): v for ms, v in chart.get("total_volumes") or ()}
+        out = []
+        for ms, price in prices:
+            ms = int(ms)
+            if cutoff_ms is None or ms >= cutoff_ms:
+                out.append((ms, _num(price), _num(mc.get(ms)), _num(vol.get(ms))))
+        return out
+    except (TypeError, ValueError) as err:
+        raise ValueError(f"malformed market_chart body for {asset_id!r}: {err}") from err
+
+
+def fetch_chart_prices(
     universe: DataFrame,
     fetcher: Fetcher,
     days: int = 1,
     vs: str = "usd",
     pacing_s: float = 0.0,
+    cutoff_ms: int | None = None,
 ) -> DataFrame:
-    """Per-asset market_chart fetch (reference src/coingecko.py:70-90) —
-    parallel across partitions, paced within each (reference
-    src/backfill.py:31's 1 s sleep becomes per-partition pacing)."""
+    """Per-asset market_chart fetch (reference src/coingecko.py:70-90) →
+    prices rows (reference src/etl.py:36-44), parallel across partitions and
+    paced within each (reference src/backfill.py:31's 1 s sleep becomes
+    per-partition pacing).
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    Each task fetches its slice's charts once, normalizes them with
+    ``chart_points`` and emits one typed Arrow batch per input batch; a
+    ``select`` then adds the second-precision UTC ``ts`` (reference
+    src/etl.py:42), ``source`` and ``inserted_at``. The frame is lazy:
+    every action on it fetches the charts again.
+    """
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         first = True
         for b in batches:
-            for cid in b["asset_id"].tolist():
+            ids: list[str] = []
+            rows: list[tuple] = []
+            for cid in b.column("asset_id").to_pylist():
                 if not first and pacing_s:
                     time.sleep(pacing_s)
                 first = False
                 url = f"{API_BASE}/coins/{cid}/market_chart?vs_currency={vs}&days={days}"
-                body = fetch_with_retry(fetcher, url)
-                yield pd.DataFrame({"asset_id": [cid], "payload": [body]})
+                points = chart_points(cid, fetch_with_retry(fetcher, url), cutoff_ms)
+                ids.extend([cid] * len(points))
+                rows.extend(points)
+            ms, price, mcap, vol = zip(*rows) if rows else ((), (), (), ())
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(ids, pa.string()),
+                    pa.array(ms, pa.int64()),
+                    pa.array(price, pa.float64()),
+                    pa.array(mcap, pa.float64()),
+                    pa.array(vol, pa.float64()),
+                ],
+                names=POINTS_SCHEMA.fieldNames(),
+            )
 
-    return universe.mapInPandas(run, CHART_SCHEMA)
-
-
-def normalize_chart_payloads(charts: DataFrame, cutoff_ms: int | None = None) -> DataFrame:
-    """Parallel-array JSON → prices rows (reference src/etl.py:36-44).
-
-    from_json + explode of the ``prices`` array, then ms-keyed LEFT joins
-    against the exploded market_caps/total_volumes arrays — the relational
-    equivalent of the reference's ``mc_map.get(ms)`` dict probes. The
-    optional ``cutoff_ms`` reproduces the hourly-emulation trim (reference
-    src/coingecko.py:79-84).
-    """
-    parsed = charts.select(
-        "asset_id", F.from_json("payload", CHART_JSON_SCHEMA).alias("j")
-    )
-
-    def series(field: str, value_name: str) -> DataFrame:
-        out = parsed.select(
-            "asset_id", F.explode(f"j.{field}").alias("pt")
-        ).select(
-            "asset_id",
-            F.col("pt")[0].cast("long").alias("ms"),
-            F.col("pt")[1].alias(value_name),
-        )
-        if cutoff_ms is not None:
-            out = out.filter(F.col("ms") >= F.lit(cutoff_ms))
-        return out
-
-    prices = series("prices", "price")
-    mcaps = series("market_caps", "market_cap")
-    vols = series("total_volumes", "volume")
-    joined = prices.join(mcaps, ["asset_id", "ms"], "left").join(
-        vols, ["asset_id", "ms"], "left"
-    )
-    # epoch-ms → UTC ts at second precision (reference src/etl.py:42)
-    return joined.select(
+    return universe.mapInArrow(run, POINTS_SCHEMA).select(
         "asset_id",
         F.date_trunc("second", F.timestamp_millis("ms")).alias("ts"),
         "price",

@@ -19,10 +19,10 @@ from crypto_market_tracker_etl_spark.sources.config import (
 )
 from crypto_market_tracker_etl_spark.sources.rest import (
     RateLimitError,
-    fetch_market_charts,
+    chart_points,
+    fetch_chart_prices,
     fetch_markets,
     fetch_with_retry,
-    normalize_chart_payloads,
 )
 
 ASSETS = ["bitcoin", "ethereum", "solana"]
@@ -84,8 +84,7 @@ def test_fetch_markets_offline(spark):
 
 def test_chart_normalization_ms_join(spark):
     universe = asset_universe_df(spark, ["bitcoin"])
-    charts = fetch_market_charts(universe, fake_fetch)
-    prices = normalize_chart_payloads(charts)
+    prices = fetch_chart_prices(universe, fake_fetch)
     rows = prices.orderBy("ts").collect()
     assert len(rows) == 24
     assert rows[0]["price"] == 107.0  # 100 + len('bitcoin')
@@ -97,10 +96,66 @@ def test_chart_normalization_ms_join(spark):
 
 def test_chart_cutoff_trim(spark):
     universe = asset_universe_df(spark, ["bitcoin"])
-    charts = fetch_market_charts(universe, fake_fetch)
     cutoff = BASE_MS + 12 * 3_600_000
-    trimmed = normalize_chart_payloads(charts, cutoff_ms=cutoff)
+    trimmed = fetch_chart_prices(universe, fake_fetch, cutoff_ms=cutoff)
     assert trimmed.count() == 12
+
+
+def make_body_fetch(bodies: dict):
+    """``fake_fetch`` with the market_chart body of some assets replaced."""
+    inner = make_fake_fetch()
+
+    def fetch(url: str) -> str:
+        if "/market_chart" in url:
+            cid = url.split("/coins/")[1].split("/")[0]
+            if cid in bodies:
+                return bodies[cid]
+        return inner(url)
+
+    return fetch
+
+
+def make_counting_fetch(counters: dict):
+    """``fake_fetch`` that bumps the asset's Spark accumulator on every
+    market_chart request (executors add, the driver reads)."""
+    inner = make_fake_fetch()
+
+    def fetch(url: str) -> str:
+        if "/market_chart" in url:
+            counters[url.split("/coins/")[1].split("/")[0]].add(1)
+        return inner(url)
+
+    return fetch
+
+
+def test_chart_repeated_ms_keeps_later_value(spark):
+    """A repeated ms in market_caps keeps the later value and still yields
+    one price row; an ms join would multiply that row."""
+    body = json.dumps({
+        "prices": [[BASE_MS, 1.0], [BASE_MS + 3_600_000, 2.0]],
+        "market_caps": [[BASE_MS, 10.0], [BASE_MS, 11.0], [BASE_MS + 3_600_000, 12.0]],
+        "total_volumes": [[BASE_MS, 5.0]],
+    })
+    assert chart_points("bitcoin", body) == [
+        (BASE_MS, 1.0, 11.0, 5.0),
+        (BASE_MS + 3_600_000, 2.0, 12.0, None),
+    ]
+    universe = asset_universe_df(spark, ["bitcoin"])
+    rows = fetch_chart_prices(
+        universe, make_body_fetch({"bitcoin": body})
+    ).orderBy("ts").collect()
+    assert [(r["price"], r["market_cap"], r["volume"]) for r in rows] == [
+        (1.0, 11.0, 5.0), (2.0, 12.0, None)
+    ]
+
+
+@pytest.mark.parametrize(
+    "body", ["<html>rate limited</html>", '{"error": "coin not found"}', "[]",
+             '{"prices": [[1700000000000]]}']
+)
+def test_chart_points_rejects_malformed_body(body):
+    with pytest.raises(ValueError, match="'solana'"):
+        chart_points("solana", body)
 
 
 def test_retry_backoff_then_success():
@@ -150,6 +205,61 @@ def test_run_backfill_caps_days(spark, tmp_path):
     )
     prices = run_backfill(spark, ["bitcoin"], fake_fetch, sink, days=365)
     assert prices.count() == 24
+
+
+def _txn_sink(spark, path):
+    from crypto_market_tracker_etl_spark.operators.txn_sink import (
+        ManifestParquetSink,
+    )
+
+    return ManifestParquetSink(
+        spark, path, keys=["asset_id", "ts"], ts_col="ts", order=["inserted_at"]
+    )
+
+
+def test_etl_fetches_each_chart_once(spark, tmp_path):
+    """Each run requests every asset's market_chart exactly once: the fetch
+    and its normalization run in one task, not once per exploded series."""
+    counters = {a: spark.sparkContext.accumulator(0) for a in ASSETS}
+    fetch = make_counting_fetch(counters)
+    sink = _txn_sink(spark, str(tmp_path / "prices"))
+    run_backfill(spark, ASSETS, fetch, sink, days=1)
+    assert {a: c.value for a, c in counters.items()} == dict.fromkeys(ASSETS, 1)
+    run_incremental(spark, ASSETS, fetch, sink, days=1)
+    assert {a: c.value for a, c in counters.items()} == dict.fromkeys(ASSETS, 2)
+    assert sink.read().count() == 72
+
+
+def test_repeated_price_ms_stores_one_row(spark, tmp_path):
+    """The sink dedups the fetched batch itself: a chart that repeats a
+    price ms stores one row for that (asset_id, ts)."""
+    body = json.dumps({
+        "prices": [[BASE_MS, 1.0], [BASE_MS, 1.5], [BASE_MS + 3_600_000, 2.0]],
+        "market_caps": [], "total_volumes": [],
+    })
+    fetch = make_body_fetch({"bitcoin": body})
+    for sink in (
+        _txn_sink(spark, str(tmp_path / "txn")),
+        ParquetUpsertSink(spark, str(tmp_path / "swap"), keys=["asset_id", "ts"], ts_col="ts"),
+    ):
+        prices = run_backfill(spark, ["bitcoin"], fetch, sink, days=1)
+        assert prices.count() == 2
+        rows = sink.read().collect()
+        assert len(rows) == 2
+        assert len({r["ts"] for r in rows}) == 2
+
+
+def test_malformed_chart_body_fails_the_run(spark, tmp_path):
+    """A rate-limit page served as a chart body fails the run loudly,
+    naming the asset, and commits nothing."""
+    sink = _txn_sink(spark, str(tmp_path / "prices"))
+    run_backfill(spark, ASSETS, fake_fetch, sink, days=1)
+    v = sink.current_version()
+    fetch = make_body_fetch({"solana": "<html>rate limited</html>"})
+    with pytest.raises(Exception, match="malformed market_chart body for 'solana'"):
+        run_backfill(spark, ASSETS, fetch, sink, days=1)
+    assert sink.current_version() == v
+    assert sink.read().count() == 72
 
 
 def test_refresh_daily_metrics_incremental(spark, tmp_path):
