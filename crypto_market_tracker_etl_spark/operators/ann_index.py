@@ -45,6 +45,7 @@ from .pq import (
     _coded_corpus_udf,
     _collect_query_arrays,
     _exact_rerank,
+    _check_topk_args,
     _QueryTables,
     _topk,
     codebooks_from_seeds,
@@ -522,6 +523,7 @@ class IvfPqIndex:
         pushdown. The probed lists are still chosen by vector geometry
         alone: a filter selective enough to empty a probed list behaves
         like any under-filled list (fewer than k results)."""
+        _check_topk_args(k, rerank)
         qids, Qv = _collect_query_arrays(queries, self.id_col, self.vec_col)
         if qids.size == 0:
             return self.spark.createDataFrame(

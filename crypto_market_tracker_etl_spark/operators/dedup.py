@@ -414,8 +414,10 @@ def set_similarity_join(
     prefix filtering guarantees NONE while still never enumerating all
     pairs.
 
-    ``tokens``: (doc_id, w) DISTINCT membership rows. Three PPJoin filters,
-    all zero-false-negative by construction:
+    ``tokens``: (doc_id, w) membership rows. Bag-shaped input (a token
+    repeated within a doc) is treated as its set: the same pairs and
+    scores as ``tokens.distinct()``. Three PPJoin filters, all
+    zero-false-negative by construction:
 
     1. PREFIX filter — order each doc's tokens by global rarity
        ((corpus freq, token); the order only has to be CONSISTENT, so no
@@ -464,20 +466,24 @@ def set_similarity_join(
     (doc_id, ws) the caller already has (e.g. the un-exploded
     word_shingles column) — sizes then cost ``size(ws)`` instead of a
     count shuffle, and verification reads one array row per pair side.
-    When absent, the arrays are grouped back from ``tokens`` (one
-    shuffle, replacing the former sizes count shuffle). VERIFY SHAPE
-    (r13): the old verify expanded every candidate pair by ALL of
-    doc_a's tokens before the doc_b equi-join could cut it — measured
-    33.5M intermediate rows for 481k candidates / 6k true pairs at
-    sf0.1 — then paid a pair-grain aggregate; the exact overlap is now
+    When absent, the arrays are grouped back from ``tokens`` as SETS (one
+    shuffle, replacing the former sizes count shuffle) and the membership
+    rows every other consumer reads are re-exploded from them, so repeated
+    tokens count once in sizes, frequencies and prefixes alike. With
+    ``sets`` given, the caller guarantees each array is duplicate-free
+    and that ``tokens`` is its explode (no dedup shuffle is added).
+    VERIFY SHAPE (r13): the old verify expanded every candidate pair by
+    ALL of doc_a's tokens before the doc_b equi-join could cut it —
+    measured 33.5M intermediate rows for 481k candidates / 6k true pairs
+    at sf0.1 — then paid a pair-grain aggregate; the exact overlap is now
     ``size(array_intersect(ws_a, ws_b))`` over two array lookups per
-    pair (same J by construction: membership rows are distinct, so the
-    grouped arrays are sets). At 100 TB the verify joins shuffle one
+    pair (same J by construction: the arrays are sets). At 100 TB the verify joins shuffle one
     array row per doc side instead of |doc| token rows."""
     if persist:
         tokens = tokens.persist()
     if sets is None:
-        sets = tokens.groupBy("doc_id").agg(F.collect_list("w").alias("ws"))
+        sets = tokens.groupBy("doc_id").agg(F.collect_set("w").alias("ws"))
+        tokens = sets.select("doc_id", F.explode("ws").alias("w"))
     sizes = sets.select("doc_id", F.size("ws").alias("sz"))
     freq = tokens.groupBy("w").agg(F.count(F.lit(1)).alias("freq"))
     ordered = tokens.join(freq, "w")

@@ -12,17 +12,21 @@ computation), never against the raw vectors.
 
 Scale shape (the 100 TB story):
 
-- **Encoding is one narrow scan, no joins, no shuffles** — by default an
-  Arrow-batched numpy kernel (see ``pq_encode``: Spark evaluates
-  higher-order functions interpreted, so the pure-Catalyst reference path,
-  kept as ``vectorized=False``, is ~1000× slower per row and exists for
-  oracle-semantics documentation and the bit-equivalence pytest).
+- **Encoding is one narrow scan, no joins, no shuffles** — one numpy
+  kernel per step: ``_np_encode`` (coarse argmin → optional residual →
+  per-subspace argmin) encodes every Arrow batch, ``_QueryTables`` builds
+  every query's ADC tables. Spark evaluates higher-order functions
+  interpreted, so the pure-Catalyst twins (``pq_encode``,
+  ``query_distance_tables``) are ~1000× slower per row; they exist only
+  as the ``scan="join"`` reference plan the bit-equivalence tests compare
+  against.
 - **ADC is table lookup, not arithmetic**: each query precomputes an
-  ``m × ks`` table of subspace distances (a few KB). By default the fused
-  ``_adc_scan`` scores ALL queries inside the same Arrow pass and emits
-  only per-partition top-R partials — the |corpus|×|Q| pair relation never
-  materializes — and the scan reads only the codes column (m bytes per
-  vector), so a 100 TB raw corpus probes as a ~3 TB codes scan.
+  ``m × ks`` table of subspace distances (a few KB). The fused
+  ``_adc_scan`` (``scan="arrow"``, production) scores ALL queries inside
+  the same Arrow pass and emits only per-partition top-R partials — the
+  |corpus|×|Q| pair relation never materializes — and the scan reads only
+  the codes column (m bytes per vector), so a 100 TB raw corpus probes as
+  a ~3 TB codes scan.
 - **Top-k** is the windowed per-key rank (WindowGroupLimit pushes the
   per-partition heap map-side); output is k·|Q| rows.
 - At production scale PQ composes with IVF (IVF-PQ): the coarse quantizer
@@ -51,9 +55,9 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vector import as_double
+from .ivf import assign_list, probe_lists, seed_centroids
 from .ivf import np_coarse_nd as _np_coarse_nd
 from .ivf import np_matrix as _np_matrix
-from .ivf import seed_centroids
 
 # Integer quantization scale for squared subspace distances. 10⁴ keeps
 # ranking resolution at 1e-4 (inputs are O(1) doubles) while 8 subspace
@@ -146,36 +150,24 @@ def _np_sub_dists_int(V: np.ndarray, sub: int, codebook: list[list[float]]) -> n
     return np.floor(d * DIST_SCALE + 0.5).astype(np.int64)
 
 
-def _codes_udf(codebooks: Codebooks):
-    m = len(codebooks)
-
-    @F.pandas_udf("array<int>")
-    def _f(emb: pd.Series) -> pd.Series:
-        V = _np_matrix(emb)
-        if V.shape[0] == 0:
-            return pd.Series([], dtype=object)
-        out = np.empty((V.shape[0], m), dtype=np.int32)
-        for s in range(m):
-            out[:, s] = _np_sub_dists_int(V, s, codebooks[s]).argmin(1)
-        return pd.Series(list(out))
-
-    return _f
-
-
-def _tables_udf(codebooks: Codebooks):
-    m = len(codebooks)
-
-    @F.pandas_udf("array<array<bigint>>")
-    def _f(emb: pd.Series) -> pd.Series:
-        V = _np_matrix(emb)
-        if V.shape[0] == 0:
-            return pd.Series([], dtype=object)
-        tbl = np.stack(
-            [_np_sub_dists_int(V, s, codebooks[s]) for s in range(m)], axis=1
-        )  # n × m × ks
-        return pd.Series([t.tolist() for t in tbl])
-
-    return _f
+def _np_encode(
+    V: np.ndarray,
+    codebooks: Codebooks,
+    centroids: list[list[float]] | np.ndarray | None = None,
+    residual: bool = False,
+) -> tuple[np.ndarray, np.ndarray | None]:
+    """The one PQ encode kernel: (codes, lid) for a batch ``V`` (n × D).
+    ``lid`` is the coarse list assignment when ``centroids`` is given
+    (else None); ``residual=True`` encodes ``v − centroid(lid)`` (IVFADC;
+    pass residual codebooks). Per subspace, the argmin over the
+    integer-quantized distances — smallest sid wins ties, exactly the
+    Catalyst ``array_min`` over (d, sid) structs in ``pq_encode``."""
+    lid = _np_coarse_nd(V, centroids).argmin(1) if centroids is not None else None
+    base = V - np.asarray(centroids, dtype=np.float64)[lid] if residual else V
+    codes = np.empty((V.shape[0], len(codebooks)), dtype=np.int32)
+    for s, cb in enumerate(codebooks):
+        codes[:, s] = _np_sub_dists_int(base, s, cb).argmin(1)
+    return codes, lid
 
 
 def _coded_corpus_udf(
@@ -183,12 +175,8 @@ def _coded_corpus_udf(
     centroids: list[list[float]],
     residual: bool = False,
 ):
-    """One Arrow pass over the corpus: PQ codes + coarse list assignment.
-    Fusing them matters — each was individually cheap in numpy but the
-    interpreted expression twins cost seconds per scan, and one UDF means
-    one scan, one Python round-trip. ``residual=True`` encodes
-    ``v − centroid(list)`` (IVFADC; pass residual codebooks)."""
-    m = len(codebooks)
+    """One Arrow pass over the corpus: PQ codes + coarse list assignment
+    (``_np_encode``) — what ``IvfPqIndex.build``/``append`` write."""
     C = np.asarray(centroids, dtype=np.float64)
 
     @F.pandas_udf("struct<codes: array<int>, list_id: int>")
@@ -201,41 +189,8 @@ def _coded_corpus_udf(
                     "list_id": pd.Series([], dtype="int32"),
                 }
             )
-        lid = _np_coarse_nd(V, centroids).argmin(1)
-        base = V - C[lid] if residual else V
-        codes = np.empty((V.shape[0], m), dtype=np.int32)
-        for s in range(m):
-            codes[:, s] = _np_sub_dists_int(base, s, codebooks[s]).argmin(1)
+        codes, lid = _np_encode(V, codebooks, C, residual)
         return pd.DataFrame({"codes": list(codes), "list_id": lid.astype(np.int32)})
-
-    return _f
-
-
-def _probed_queries_udf(
-    codebooks: Codebooks, centroids: list[list[float]], nprobe: int
-):
-    """One Arrow pass over the query set: ADC tables + nprobe probe list,
-    nearest list first (stable argsort ≡ the (nd, cid) struct sort)."""
-    m = len(codebooks)
-
-    @F.pandas_udf("struct<qtbl: array<array<bigint>>, probes: array<int>>")
-    def _f(emb: pd.Series) -> pd.DataFrame:
-        V = _np_matrix(emb)
-        if V.shape[0] == 0:
-            return pd.DataFrame(
-                {
-                    "qtbl": pd.Series([], dtype=object),
-                    "probes": pd.Series([], dtype=object),
-                }
-            )
-        tbl = np.stack(
-            [_np_sub_dists_int(V, s, codebooks[s]) for s in range(m)], axis=1
-        )
-        nd = _np_coarse_nd(V, centroids)
-        probes = np.argsort(nd, axis=1, kind="stable")[:, :nprobe].astype(np.int32)
-        return pd.DataFrame(
-            {"qtbl": [t.tolist() for t in tbl], "probes": list(probes)}
-        )
 
     return _f
 
@@ -244,25 +199,18 @@ def pq_encode(
     df: DataFrame,
     codebooks: Codebooks,
     vec_col: str = "embedding",
-    vectorized: bool = True,
 ) -> DataFrame:
     """Add ``codes: array<int>`` (length m): per subspace the argmin-
-    distance codebook id, deterministic smallest-sid tiebreak. Indexing a
-    corpus is one narrow scan either way.
+    distance codebook id, deterministic smallest-sid tiebreak.
 
-    ``vectorized=True`` (default): Arrow-batched numpy kernel. This is the
-    one place in the engine where a Pandas UDF beats the built-in
-    expression: the encode is m·ks lambda-evaluated folds per ROW, and
-    Spark evaluates higher-order functions interpreted (they are excluded
-    from whole-stage codegen), at ~µs per lambda call — measured 35 ms/row
-    at m=8, ks=16 vs ~10 µs/row for the numpy batch kernel. The kernel is
-    bit-identical to the expression path (see ``_np_sub_dists_int``), so
-    the oracle attestation covers both; ``vectorized=False`` keeps the
-    pure-Catalyst reference implementation (codebook-literal ``transform``,
-    slices pre-projected once per row — the naive per-code unrolling was
+    Pure-Catalyst REFERENCE: only the ``scan="join"`` reference plans and
+    the tests use it; production encodes with ``_np_encode``, which the
+    equivalence tests pin bit-identical to this. Spark evaluates
+    higher-order functions interpreted (excluded from whole-stage
+    codegen), so this costs m·ks lambda-evaluated folds per row. The
+    codebook-literal ``transform`` over slices pre-projected once per row
+    is the fastest expression form (the naive per-code unrolling was
     another 10× slower)."""
-    if vectorized:
-        return df.withColumn("codes", _codes_udf(codebooks)(F.col(vec_col)))
     m = len(codebooks)
     dsub = len(codebooks[0][0])
     slice_cols = [f"__pq_s{s}" for s in range(m)]
@@ -290,18 +238,14 @@ def query_distance_tables(
     codebooks: Codebooks,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    vectorized: bool = True,
 ) -> DataFrame:
     """Per-query ADC lookup table: ``qtbl[s][sid]`` = integer-quantized
     squared distance from the query's subspace-``s`` slice to codebook
     entry ``sid``. m·ks BIGINTs per query (~1 KB) — broadcastable for any
-    bounded query set. Same vectorized-vs-expression twin story as
-    ``pq_encode`` (bit-identical, pytest-pinned)."""
-    if vectorized:
-        return queries.select(
-            F.col(id_col).alias("query_id"),
-            _tables_udf(codebooks)(F.col(vec_col)).alias("qtbl"),
-        )
+    bounded query set. Pure-Catalyst REFERENCE, like ``pq_encode``: only
+    the ``scan="join"`` reference plans and the tests use it; production
+    builds the same tables in ``_QueryTables`` (bit-identical,
+    pytest-pinned)."""
     m = len(codebooks)
     dsub = len(codebooks[0][0])
     v = as_double(F.col(vec_col))
@@ -420,26 +364,6 @@ def _collect_query_arrays(queries: DataFrame, id_col: str, vec_col: str):
     return qids[order], Qv[order]
 
 
-def ivfadc_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    centroids: list[list[float]],
-    codebooks: Codebooks,
-    k: int = 3,
-    nprobe: int = 2,
-    rerank: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Convenience wrapper: residual IVF-PQ (IVFADC) on the arrow scan —
-    pass codebooks built by ``seed_residual_codebooks``."""
-    return ivf_pq_topk(
-        corpus, queries, centroids, codebooks, k=k, nprobe=nprobe,
-        rerank=rerank, id_col=id_col, vec_col=vec_col,
-        scan="arrow", residual=True,
-    )
-
-
 def _adc_scan(
     corpus: DataFrame,
     qids: np.ndarray,
@@ -475,25 +399,15 @@ def _adc_scan(
             [], "query_id long, neighbor_id long, adc long"
         )
     qt = _QueryTables(qids, Qv, codebooks, centroids, nprobe, residual)
-    C = qt.C
-    m = len(codebooks)
 
     def gen(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = _np_matrix(pdf[vec_col])
-            nid = pdf[id_col].to_numpy()
-            lid = (
-                _np_coarse_nd(V, centroids).argmin(1)
-                if centroids is not None
-                else None
+            codes, lid = _np_encode(
+                _np_matrix(pdf[vec_col]), codebooks, qt.C, residual
             )
-            base = V - C[lid] if residual else V
-            codes = np.empty((len(nid), m), dtype=np.int32)
-            for s in range(m):
-                codes[:, s] = _np_sub_dists_int(base, s, codebooks[s]).argmin(1)
-            out = qt.score_batch(codes, nid, lid, shortlist)
+            out = qt.score_batch(codes, pdf[id_col].to_numpy(), lid, shortlist)
             if out is not None:
                 yield out
 
@@ -504,9 +418,10 @@ def _adc_scan(
 
 class _QueryTables:
     """Driver-side query-probe state for an ADC scan: per-query ADC lookup
-    tables (plain, or per-probed-list residual tables), probe lists, and
-    the batch scorer shared by the encode-on-the-fly scan (``_adc_scan``)
-    and the stored-codes index probe (``ann_index.IvfPqIndex.probe``)."""
+    tables (plain, or per-probed-list residual tables) — the one numpy
+    query-table builder — probe lists, and the batch scorer shared by the
+    encode-on-the-fly scan (``_adc_scan``) and the stored-codes index
+    probe (``ann_index.IvfPqIndex.probe``)."""
 
     def __init__(
         self,
@@ -605,6 +520,18 @@ class _QueryTables:
         )
 
 
+def _check_topk_args(k: int, rerank: int | None, scan: str = "arrow") -> None:
+    """Reject ANN arguments outside the contract instead of silently
+    running another plan or returning fewer than k rows per query."""
+    if scan not in ("arrow", "join"):
+        raise ValueError(f"scan must be 'arrow' or 'join', got {scan!r}")
+    if rerank is not None and rerank < k:
+        raise ValueError(
+            f"rerank={rerank} < k={k}: the shortlist must hold at least k "
+            "candidates per query"
+        )
+
+
 def pq_adc_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -613,7 +540,6 @@ def pq_adc_topk(
     rerank: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    vectorized: bool = True,
     scan: str = "arrow",
 ) -> DataFrame:
     """Approximate top-k per query by ADC over PQ codes (full-corpus scan
@@ -622,24 +548,26 @@ def pq_adc_topk(
     table lookups summed in exact BIGINT; ties broken by
     (adc, neighbor_id) ascending.
 
-    ``rerank=R`` turns ADC into a candidate generator (the production PQ
-    posture): the ADC top-R per query is re-scored with EXACT integer-
-    quantized distances over the raw vectors, and the final top-k comes
-    from that. R is constant per query, so the exact work is R·|Q| point
-    lookups — a broadcast of the R·|Q| candidate ids into one more corpus
-    scan, never a corpus shuffle — and the exactly-scanned fraction R/n
-    vanishes as the corpus grows. On unclustered corpora (quantization's
-    worst case) re-rank is what buys usable recall: measured at sf0.01,
-    recall@3 0.17 (R=0) → 0.73 (R=50).
+    ``rerank=R`` (R ≥ k) turns ADC into a candidate generator (the
+    production PQ posture): the ADC top-R per query is re-scored with
+    EXACT integer-quantized distances over the raw vectors, and the final
+    top-k comes from that. R is constant per query, so the exact work is
+    R·|Q| point lookups — a broadcast of the R·|Q| candidate ids into one
+    more corpus scan, never a corpus shuffle — and the exactly-scanned
+    fraction R/n vanishes as the corpus grows. On unclustered corpora
+    (quantization's worst case) re-rank is what buys usable recall:
+    measured at sf0.01, recall@3 0.17 (R=0) → 0.73 (R=50).
 
     Without re-rank returns (query_id, neighbor_id, adc, rank); with it
     (query_id, neighbor_id, sqdist, rank), sqdist the exact quantized
     squared distance.
 
-    ``scan='arrow'`` (default) uses the fused ``_adc_scan`` kernel —
-    never materializes the pair relation; ``scan='join'`` is the
-    reference plan (coded corpus ⨯ broadcast tables, per-pair fold),
-    bit-identical and pytest-pinned, quadratic-materialization-bound."""
+    ``scan='arrow'`` (default, production) uses the fused ``_adc_scan``
+    kernel — never materializes the pair relation; ``scan='join'`` is the
+    pure-Catalyst reference plan (coded corpus ⨯ broadcast tables,
+    per-pair fold), bit-identical and pytest-pinned,
+    quadratic-materialization-bound."""
+    _check_topk_args(k, rerank, scan)
     if scan == "arrow":
         qids, Qv = _collect_query_arrays(queries, id_col, vec_col)
         scored = _adc_scan(
@@ -647,13 +575,10 @@ def pq_adc_topk(
             id_col=id_col, vec_col=vec_col,
         )
     else:
-        coded = pq_encode(
-            corpus, codebooks, vec_col=vec_col, vectorized=vectorized
-        ).select(F.col(id_col).alias("neighbor_id"), "codes")
-        qt = query_distance_tables(
-            queries, codebooks, id_col=id_col, vec_col=vec_col,
-            vectorized=vectorized,
+        coded = pq_encode(corpus, codebooks, vec_col=vec_col).select(
+            F.col(id_col).alias("neighbor_id"), "codes"
         )
+        qt = query_distance_tables(queries, codebooks, id_col=id_col, vec_col=vec_col)
         pairs = coded.join(
             F.broadcast(qt), F.col("neighbor_id") != F.col("query_id"), "inner"
         )
@@ -674,7 +599,6 @@ def ivf_pq_topk(
     rerank: int = 50,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    vectorized: bool = True,
     scan: str = "arrow",
     residual: bool = False,
 ) -> DataFrame:
@@ -689,12 +613,13 @@ def ivf_pq_topk(
     index (codes persisted partitioned by list_id, probing = partition
     pruning, streaming appends) see operators/ann_index.py.
 
-    ``scan='arrow'`` (default): the fused ``_adc_scan`` — one mapInPandas
-    pass encodes each batch, probe-filters it, scores all queries, and
-    emits per-partition top-R partials; then windowed top-R and exact
-    re-rank of the shortlist. ``scan='join'`` is the bit-identical
-    reference plan (broadcast list-id equi-join, per-pair interpreted
-    fold — fine at sf scale, quadratic-materialization-bound beyond).
+    ``scan='arrow'`` (default, production): the fused ``_adc_scan`` — one
+    mapInPandas pass encodes each batch, probe-filters it, scores all
+    queries, and emits per-partition top-R partials; then windowed top-R
+    and exact re-rank of the shortlist (R = ``rerank`` ≥ k).
+    ``scan='join'`` is the bit-identical pure-Catalyst reference plan
+    (broadcast list-id equi-join, per-pair interpreted fold — fine at sf
+    scale, quadratic-materialization-bound beyond).
 
     ``residual=True`` (arrow scan only) is IVFADC proper: codes quantize
     ``v − centroid(list)`` with codebooks built over residuals
@@ -702,10 +627,12 @@ def ivf_pq_topk(
     query carries per-probed-list tables. On clustered corpora this is
     the difference between ADC working and ADC degenerating to chance
     within a list (scale-probe recall@3: 0.06 raw → 0.75 residual, see
-    SCALE.md). The registered oracle query stays non-residual: per-(query,
-    list) tables are SQL-expressible but roughly double the oracle, and
-    the quality gap only appears on clustered data the sf testdata
-    doesn't have."""
+    SCALE.md). The full-size registered oracle query (knn_ivfpq) stays
+    non-residual: per-(query, list) tables are SQL-expressible but
+    roughly double the oracle, and the quality gap only appears on
+    clustered data the sf testdata doesn't have; knn_ivfadc pins the
+    residual arithmetic on a micro configuration."""
+    _check_topk_args(k, rerank, scan)
     if scan == "arrow":
         qids, Qv = _collect_query_arrays(queries, id_col, vec_col)
         scored = _adc_scan(
@@ -717,41 +644,18 @@ def ivf_pq_topk(
         return _exact_rerank(cand, corpus, queries, k, id_col, vec_col)
     if residual:
         raise ValueError("residual IVFADC is implemented on the arrow scan only")
-    if vectorized:
-        coded = corpus.withColumn(
-            "__e", _coded_corpus_udf(codebooks, centroids)(F.col(vec_col))
-        ).select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col("__e.codes").alias("codes"),
-            F.col("__e.list_id").alias("list_id"),
-        )
-        qjoined = queries.withColumn(
-            "__q", _probed_queries_udf(codebooks, centroids, nprobe)(F.col(vec_col))
-        ).select(
-            F.col(id_col).alias("query_id"),
-            F.col("__q.qtbl").alias("qtbl"),
-            F.explode(F.col("__q.probes")).alias("list_id"),
-        )
-    else:
-        from .ivf import assign_list, probe_lists
-
-        v = as_double(F.col(vec_col))
-        coded = pq_encode(
-            corpus, codebooks, vec_col=vec_col, vectorized=False
-        ).select(
-            F.col(id_col).alias("neighbor_id"),
-            "codes",
-            assign_list(v, centroids).alias("list_id"),
-        )
-        qt = query_distance_tables(
-            queries, codebooks, id_col=id_col, vec_col=vec_col, vectorized=False
-        )
-        qp = queries.select(
-            F.col(id_col).alias("query_id"),
-            F.explode(probe_lists(v, centroids, nprobe)).alias("list_id"),
-        )
-        qjoined = qt.join(qp, "query_id")
-    pairs = coded.join(F.broadcast(qjoined), "list_id").filter(
+    v = as_double(F.col(vec_col))
+    coded = pq_encode(corpus, codebooks, vec_col=vec_col).select(
+        F.col(id_col).alias("neighbor_id"),
+        "codes",
+        assign_list(v, centroids).alias("list_id"),
+    )
+    qt = query_distance_tables(queries, codebooks, id_col=id_col, vec_col=vec_col)
+    qp = queries.select(
+        F.col(id_col).alias("query_id"),
+        F.explode(probe_lists(v, centroids, nprobe)).alias("list_id"),
+    )
+    pairs = coded.join(F.broadcast(qt.join(qp, "query_id")), "list_id").filter(
         F.col("neighbor_id") != F.col("query_id")
     )
     scored = pairs.select("query_id", "neighbor_id", _adc_col().alias("adc"))

@@ -1236,7 +1236,8 @@ SQL_KNN_IVFPQ = _sql_knn_ivfpq()
 # RESIDUAL codebooks — small enough that the per-(query, probed-list)
 # residual ADC tables fit one SQL CTE, which is what pins the residual
 # arithmetic (v − centroid before encoding; query tables against EACH
-# probed list's centroid) the pytest-only full-size ivfadc_topk relies on.
+# probed list's centroid) that full-size residual IVF-PQ
+# (ivf_pq_topk(..., residual=True), pytest-only) relies on.
 IVFADC_KC = 2
 IVFADC_NPROBE = 1
 IVFADC_KS = 4
@@ -1254,16 +1255,16 @@ def q_knn_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds are the md5-order rows AFTER the centroid rows (seeding from
     the centroids themselves would yield all-zero residual codebooks)."""
     from .operators.ivf import seed_centroids
-    from .operators.pq import ivfadc_topk, residual_codebooks_from_seeds
+    from .operators.pq import ivf_pq_topk, residual_codebooks_from_seeds
 
     emb = _embeddings(spark, sf_dir)
     seeds = seed_centroids(emb, IVFADC_KC + IVFADC_KS)
     cents = seeds[:IVFADC_KC]
     cbs = residual_codebooks_from_seeds(seeds[IVFADC_KC:], cents, IVFADC_M)
     queries = emb.filter(F.col("vec_id") % 250 == 0)
-    return ivfadc_topk(
+    return ivf_pq_topk(
         emb, queries, cents, cbs,
-        k=3, nprobe=IVFADC_NPROBE, rerank=IVFADC_RERANK,
+        k=3, nprobe=IVFADC_NPROBE, rerank=IVFADC_RERANK, residual=True,
     )
 
 

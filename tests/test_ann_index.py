@@ -113,11 +113,10 @@ def test_residual_index_round_trip(spark, tmp_path):
     r1 = _rows(idx.probe(q, k=3, nprobe=2, rerank=50))
     r2 = _rows(idx.probe(q, k=3, nprobe=2, rerank=50))
     assert r1 == r2 and r1
-    from crypto_market_tracker_etl_spark.operators.pq import ivfadc_topk
-
     want = _rows(
-        ivfadc_topk(
-            emb, q, idx.centroids, idx.codebooks, k=3, nprobe=2, rerank=50
+        ivf_pq_topk(
+            emb, q, idx.centroids, idx.codebooks, k=3, nprobe=2, rerank=50,
+            residual=True,
         )
     )
     assert r1 == want
@@ -125,6 +124,50 @@ def test_residual_index_round_trip(spark, tmp_path):
     for qid, _nid, _d, rank in r1:
         by_q.setdefault(qid, []).append(rank)
     assert all(sorted(v) == list(range(1, len(v) + 1)) for v in by_q.values())
+
+
+def test_topk_rejects_unknown_scan(spark):
+    """``scan`` selects the production arrow scan or the join reference
+    plan; any other value must raise instead of silently running the
+    reference plan."""
+    import pytest
+
+    from crypto_market_tracker_etl_spark.operators.ivf import seed_centroids
+    from crypto_market_tracker_etl_spark.operators.pq import (
+        codebooks_from_seeds,
+        pq_adc_topk,
+    )
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    seeds = seed_centroids(emb, 16)
+    cbs = codebooks_from_seeds(seeds, 8)
+    q = emb.filter(F.col("vec_id") % 50 == 0)
+    with pytest.raises(ValueError, match="scan must be"):
+        pq_adc_topk(emb, q, cbs, k=3, rerank=50, scan="arow")
+    with pytest.raises(ValueError, match="scan must be"):
+        ivf_pq_topk(emb, q, seeds[:8], cbs, k=3, scan="arow")
+
+
+def test_topk_rejects_rerank_below_k(spark, tmp_path):
+    """A shortlist of R < k candidates can only return R rows per query:
+    every ADC entry point must refuse it rather than silently return
+    fewer than k neighbors."""
+    import pytest
+
+    from crypto_market_tracker_etl_spark.operators.pq import pq_adc_topk
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    idx = IvfPqIndex.build(spark, str(tmp_path / "idx"), emb, k_lists=8)
+    q = emb.filter(F.col("vec_id") % 50 == 0)
+    with pytest.raises(ValueError, match="rerank=2 < k=5"):
+        pq_adc_topk(emb, q, idx.codebooks, k=5, rerank=2)
+    with pytest.raises(ValueError, match="rerank=2 < k=5"):
+        ivf_pq_topk(emb, q, idx.centroids, idx.codebooks, k=5, rerank=2)
+    with pytest.raises(ValueError, match="rerank=2 < k=5"):
+        idx.probe(q, k=5, rerank=2)
+    # rerank == k is the smallest valid shortlist: k rows per query
+    got = idx.probe(q, k=5, nprobe=8, rerank=5).collect()
+    assert len(got) == 5 * q.count()
 
 
 def test_build_refuses_existing_index(spark, tmp_path):

@@ -2036,12 +2036,18 @@ def test_pq_rerank_recovers_recall(spark):
 
 
 def test_pq_vectorized_encode_matches_expression(spark):
-    """The Arrow/numpy PQ kernels must be BIT-identical to the Catalyst
-    expression path on real data — codes, ADC tables, and the end-to-end
-    top-k (this is what lets the oracle attestation cover the vectorized
-    default). Covers the float32→float64 widening, the sequential-order
-    subspace reduction, and floor(x+0.5)-vs-HALF_UP rounding."""
+    """The numpy PQ kernels production runs (``_np_encode`` for codes,
+    ``_QueryTables.T`` for ADC tables) must be BIT-identical to the
+    Catalyst reference on real data — codes, ADC tables, and the end-to-
+    end top-k of the arrow scan vs the join reference plan (this is what
+    lets the oracle attestation cover the numpy kernels). Covers the
+    float32→float64 widening, the sequential-order subspace reduction,
+    and floor(x+0.5)-vs-HALF_UP rounding."""
+    from crypto_market_tracker_etl_spark.operators.ivf import np_matrix
     from crypto_market_tracker_etl_spark.operators.pq import (
+        _collect_query_arrays,
+        _np_encode,
+        _QueryTables,
         pq_adc_topk,
         pq_encode,
         query_distance_tables,
@@ -2050,24 +2056,22 @@ def test_pq_vectorized_encode_matches_expression(spark):
 
     emb = load_table(spark, SF_DIR, "embeddings")
     cbs = seed_codebooks(emb, ks=16, m=8)
-    expr = {r.vec_id: r.codes for r in pq_encode(emb, cbs, vectorized=False).collect()}
-    vec = {r.vec_id: r.codes for r in pq_encode(emb, cbs, vectorized=True).collect()}
-    assert expr == vec
+    expr = {r.vec_id: r.codes for r in pq_encode(emb, cbs).collect()}
+    pdf = emb.select("vec_id", "embedding").toPandas()
+    codes, lid = _np_encode(np_matrix(pdf["embedding"]), cbs)
+    assert lid is None
+    assert expr == dict(zip(pdf["vec_id"], codes.tolist()))
 
     q = emb.filter(F.col("vec_id") % 50 == 0)
-    te = {r.query_id: r.qtbl for r in query_distance_tables(q, cbs, vectorized=False).collect()}
-    tv = {r.query_id: r.qtbl for r in query_distance_tables(q, cbs, vectorized=True).collect()}
-    assert te == tv
+    te = {r.query_id: r.qtbl for r in query_distance_tables(q, cbs).collect()}
+    qids, Qv = _collect_query_arrays(q, "vec_id", "embedding")
+    T = _QueryTables(qids, Qv, cbs, None, None, False).T
+    assert te == dict(zip(qids.tolist(), T.tolist()))
 
     rows = lambda df: sorted(map(tuple, df.collect()))
-    join_expr = rows(
-        pq_adc_topk(emb, q, cbs, k=3, rerank=50, vectorized=False, scan="join")
-    )
-    join_vec = rows(
-        pq_adc_topk(emb, q, cbs, k=3, rerank=50, vectorized=True, scan="join")
-    )
+    join_expr = rows(pq_adc_topk(emb, q, cbs, k=3, rerank=50, scan="join"))
     arrow = rows(pq_adc_topk(emb, q, cbs, k=3, rerank=50, scan="arrow"))
-    assert join_expr == join_vec == arrow
+    assert join_expr == arrow
 
 
 def test_ivfpq_subset_of_probed_lists(spark):
@@ -2116,34 +2120,44 @@ def test_ivfpq_vectorized_matches_expression(spark):
     """The fused Arrow kernel (codes + coarse assignment + probes in one
     pass) must produce the IDENTICAL end-to-end result as the pure-
     expression reference path — including the sign-aware HALF_UP rounding
-    of the quantized negative cosines feeding the coarse argmin."""
-    from crypto_market_tracker_etl_spark.operators.ivf import seed_centroids
+    of the quantized negative cosines feeding the coarse argmin, which
+    ``_np_encode``'s list assignment must match row for row."""
+    from crypto_market_tracker_etl_spark.operators.ivf import (
+        assign_list,
+        np_matrix,
+        seed_centroids,
+    )
     from crypto_market_tracker_etl_spark.operators.pq import (
+        _np_encode,
         ivf_pq_topk,
+        pq_encode,
         seed_codebooks,
     )
 
     emb = load_table(spark, SF_DIR, "embeddings")
     cents = seed_centroids(emb, 8)
     cbs = seed_codebooks(emb, ks=16, m=8)
+    v = F.col("embedding").cast("array<double>")
+    coded = pq_encode(emb, cbs).select(
+        "vec_id", "codes", assign_list(v, cents).alias("lid")
+    )
+    ref = {r.vec_id: (r.codes, r.lid) for r in coded.collect()}
+    pdf = emb.select("vec_id", "embedding").toPandas()
+    codes, lid = _np_encode(np_matrix(pdf["embedding"]), cbs, cents)
+    assert ref == {
+        vid: (c, int(l))
+        for vid, c, l in zip(pdf["vec_id"], codes.tolist(), lid)
+    }
+
     q = emb.filter(F.col("vec_id") % 50 == 0)
     rows = lambda df: sorted(map(tuple, df.collect()))
     join_expr = rows(
-        ivf_pq_topk(
-            emb, q, cents, cbs, k=3, nprobe=2, rerank=50,
-            vectorized=False, scan="join",
-        )
-    )
-    join_vec = rows(
-        ivf_pq_topk(
-            emb, q, cents, cbs, k=3, nprobe=2, rerank=50,
-            vectorized=True, scan="join",
-        )
+        ivf_pq_topk(emb, q, cents, cbs, k=3, nprobe=2, rerank=50, scan="join")
     )
     arrow = rows(
         ivf_pq_topk(emb, q, cents, cbs, k=3, nprobe=2, rerank=50, scan="arrow")
     )
-    assert join_expr == join_vec == arrow
+    assert join_expr == arrow
 
 
 def test_ivf_vectorized_matches_expression(spark):
@@ -2177,7 +2191,6 @@ def test_ivfadc_residual_beats_raw_codes_on_clustered_data(spark):
     from crypto_market_tracker_etl_spark.operators.ivf import seed_centroids
     from crypto_market_tracker_etl_spark.operators.pq import (
         ivf_pq_topk,
-        ivfadc_topk,
         seed_codebooks,
         seed_residual_codebooks,
     )
@@ -2213,8 +2226,12 @@ def test_ivfadc_residual_beats_raw_codes_on_clustered_data(spark):
         return hits / tot
 
     raw = ivf_pq_topk(emb, q, cents, raw_cbs, k=3, nprobe=2, rerank=50).collect()
-    res1 = ivfadc_topk(emb, q, cents, res_cbs, k=3, nprobe=2, rerank=50).collect()
-    res2 = ivfadc_topk(emb, q, cents, res_cbs, k=3, nprobe=2, rerank=50).collect()
+    res1 = ivf_pq_topk(
+        emb, q, cents, res_cbs, k=3, nprobe=2, rerank=50, residual=True
+    ).collect()
+    res2 = ivf_pq_topk(
+        emb, q, cents, res_cbs, k=3, nprobe=2, rerank=50, residual=True
+    ).collect()
     assert sorted(map(tuple, res1)) == sorted(map(tuple, res2))  # deterministic
     r_raw, r_res = recall(raw), recall(res1)
     assert r_res >= r_raw + 0.25, (r_raw, r_res)

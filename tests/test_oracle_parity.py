@@ -36,6 +36,9 @@ _SMOKE_CORE = {
     "minhash_bands", "simhash", "cosine_topk", "bm25_topk",
     "image_meta", "audio_meta", "video_meta", "mime_sniff",
     "media_catalog", "upsert_keep_latest", "sequence_packing",
+    # every PQ scan kernel (plain ADC, IVF-PQ, residual IVFADC) against
+    # its DuckDB reference in the default tier
+    "knn_pq", "knn_ivfpq", "knn_ivfadc",
 }
 # multi-batch store workloads and model-table builds measured ≥10s at
 # sf0.01 — never in the smoke sample regardless of the every-Nth draw

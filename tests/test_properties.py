@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from crypto_market_tracker_etl_spark.operators.asof import asof_join
@@ -560,6 +560,38 @@ def test_set_similarity_join_matches_brute_force(spark, sets, tau):
             if j >= tau:
                 want[(a, b)] = round(j, 4)
     assert got == want, (got, want, sets, tau)
+
+
+@settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    bags=st.lists(
+        st.lists(st.integers(min_value=0, max_value=12), min_size=1, max_size=10),
+        min_size=2,
+        max_size=8,
+    ),
+    tau=st.sampled_from([0.3, 0.5, 0.8]),
+)
+@example(bags=[[0, 0, 1], [0, 1]], tau=0.5)
+def test_set_similarity_join_bag_input_equals_distinct(spark, bags, tau):
+    """Bag-shaped membership rows (a token repeated within a doc) must
+    give the same pairs and Jaccard scores as their ``distinct()`` — a
+    repeated token may not inflate a doc's size, its rarity rank, or the
+    overlap (the pinned example scored 0.6667 instead of 1.0 when sizes
+    counted duplicates)."""
+    from crypto_market_tracker_etl_spark.operators.dedup import (
+        set_similarity_join,
+    )
+
+    rows = [(i, f"e{e}") for i, bag in enumerate(bags) for e in bag]
+    tokens = spark.createDataFrame(rows, "doc_id long, w string")
+
+    def pairs(df):
+        return {
+            (r["doc_a"], r["doc_b"]): r["jaccard"]
+            for r in set_similarity_join(df, tau, persist=False).collect()
+        }
+
+    assert pairs(tokens) == pairs(tokens.distinct()), (bags, tau)
 
 
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
